@@ -21,9 +21,9 @@ Usage::
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .indices import BLOCK_KEY
-from .pairing import PairingConfig, _dedup_pairs_plain, _match_pairs_plain
 
 __all__ = [
     "save_bucketed_keyed_side",
@@ -93,8 +93,8 @@ def bucketed_candidate_pairs(
     dedupe_multi_bucket: bool | None = None,
 ) -> DataFrame:
     """Candidate pairs from pre-bucketed keyed-side table(s): the
-    blocked join runs exchange-free (``pre_partitioned=True`` skips
-    the runtime repartition; bucket co-location replaces it).
+    blocked join on BLOCK_KEY runs exchange-free (bucket co-location
+    replaces the runtime repartition).
 
     Dedup mode (``table_b is None``): self-join with idx_a < idx_b.
     Match mode: A×B within blocks. Hot-block salting is intentionally
@@ -112,12 +112,15 @@ def bucketed_candidate_pairs(
         dedupe_multi_bucket = _table_multi_bucket(spark, table_a) or (
             table_b is not None and _table_multi_bucket(spark, table_b)
         )
-    cfg = PairingConfig(pre_partitioned=True, salt_enabled=False)
-    side_a = spark.table(table_a)
+
+    def role(table: str, name: str) -> DataFrame:
+        return spark.table(table).select(
+            BLOCK_KEY, F.col("idx").alias(f"idx_{name}"), F.col("rec").alias(name)
+        )
+
+    pairs = role(table_a, "a").join(role(table_b or table_a, "b"), on=BLOCK_KEY)
     if table_b is None:
-        pairs = _dedup_pairs_plain(side_a, cfg)
-    else:
-        pairs = _match_pairs_plain(side_a, spark.table(table_b), cfg)
+        pairs = pairs.where(F.col("idx_a") < F.col("idx_b"))
     pairs = pairs.drop(BLOCK_KEY)
     if dedupe_multi_bucket:
         pairs = pairs.dropDuplicates(["idx_a", "idx_b"])

@@ -195,7 +195,7 @@ class ThresholdMatcher:
             )
         ):
             # block-local scoring: Arrow traffic O(rows) not O(pairs),
-            # one action, no driver hot-key collect (grouped.py)
+            # one action (grouped.py)
             return grouped_scored_pairs(
                 self._dfa, self._index, self._row_key, self._scorer,
                 cfg=self._cfg, variator=self._variator, dfb=self._dfb,

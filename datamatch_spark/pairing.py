@@ -1,5 +1,5 @@
-"""Candidate-pair generation: blocked equi-joins with explicit skew
-salting.
+"""Candidate-pair generation: blocked equi-joins with declarative
+hot-block sharding.
 
 The reference's pairers (/root/reference/datamatch/pairers.py:114-128,
 171-181) are per-bucket cross products / 2-combinations; here:
@@ -12,36 +12,46 @@ The reference's pairers (/root/reference/datamatch/pairers.py:114-128,
 Skew handling — the part that decides whether this works at 10^12
 docs: a hot blocking key produces a quadratic pair blowup that AQE's
 skew-join (which splits *input* partitions) cannot fix alone, because
-the explosion is in the *output* of the join. Blocks whose row count
-exceeds ``salt_threshold`` are salted:
+the explosion is in the *output* of the join. Hot blocks are split
+into bounded grid CELLS (the BlockSplit idea: Kolb, Thor & Rahm,
+ICDE 2012) by ONE rule, ``cell_members``, which both scoring paths
+use — ``candidate_pairs`` joins members within a cell, grouped.py
+scores each cell in place:
 
-* dedup: rows get shard ``pmod(xxhash64(idx), s)``; the left side is
-  replicated to shards ``[shard, s)`` and joined on the target shard —
-  a triangular shard-pair enumeration that yields every unordered pair
-  exactly once and caps per-task pair output at ~(rows_per_shard)².
-* match: GRID sharding — A is hash-sharded ``sa = ceil(na/rows_per_
-  shard)`` ways and replicated to all ``sb`` B-shards, B sharded
-  ``sb = ceil(nb/rows_per_shard)`` ways and replicated to all ``sa``
-  A-shards; the join key carries the grid CELL, so every task holds
-  ≤ rows_per_shard rows of each side (≤ rows_per_shard² pairs) even
+* dedup: a block of n > ``salt_threshold`` rows gets s shards (row
+  shard ``pmod(xxhash64(idx), s)``) and every row is a member of the s
+  cells (min(shard, c), max(shard, c)). Cell (l, t), l < t holds the
+  low×high cross product, cell (l, l) the in-shard triangle — each
+  unordered pair of the block exactly once, ≤ (rows_per_shard)² pairs
+  per cell.
+* match: GRID sharding — A rows shard ``sa`` ways and join every B
+  shard's cell, B rows shard ``sb`` ways and join every A shard's
+  cell, so every cell holds ≤ rows_per_shard rows of each side even
   when one side dwarfs the other. Replication cost is
   ~2·pairs/rows_per_shard rows — always small next to the pair output.
 
-Per-block pair-count statistics (the north-rule metrics) come from the
-same block-size aggregation that detects hot keys.
+Cold blocks are the single cell (0, 0), so cold and hot blocks take
+the same join. Shard counts are Column expressions over a map-side
+block-count aggregation whose hot tail broadcasts back onto the rows:
+no driver round trip, and no Spark job runs while a plan is built.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .indices import BLOCK_KEY, BaseIndex
-from .session import checkpoint_storage_level as _ckpt_level
 
-__all__ = ["PairingConfig", "keyed_side", "candidate_pairs", "block_statistics"]
+__all__ = [
+    "PairingConfig",
+    "keyed_side",
+    "cell_members",
+    "candidate_pairs",
+    "block_statistics",
+]
 
 
 @dataclass
@@ -58,40 +68,19 @@ class PairingConfig:
     # too large serializes pair generation for the hot block into a
     # handful of tasks and caps cluster scaling.
     rows_per_shard: int = 2_000
-    # hard cap on distinct hot keys pulled to the driver
+    # hard cap on distinct hot keys sharded (the largest first); the
+    # rest stay whole blocks
     max_hot_keys: int = 100_000
     salt_enabled: bool = True
-    # partition count for the LEFT keyed side of the pair join.
+    # partition count of the cell-membership exchange (cell_members).
     # None = 2×defaultParallelism. This is the knob that keeps pair
-    # generation parallel: the keyed sides are small (ids + keys), so
-    # Catalyst broadcasts the join and AQE sizes partitions by the
-    # pre-join input bytes — the 10-100× pair blowup then lands in a
-    # handful of partitions. Explicitly hash-repartitioning the cheap
-    # input side (REPARTITION_BY_NUM is never coalesced by AQE) makes
-    # the blowup AND the downstream scoring UDFs run wide, with no
-    # post-join shuffle of the fat pair rows at all.
+    # generation parallel: AQE sizes partitions by the pre-join input
+    # bytes, so the 10-100× pair blowup would land in a handful of
+    # partitions. Explicitly hash-repartitioning the cheap member rows
+    # (REPARTITION_BY_NUM is never coalesced by AQE) makes the blowup
+    # AND the downstream scoring UDFs run wide, with no post-join
+    # shuffle of the fat pair rows at all.
     target_partitions: int | None = None
-    # True when the keyed sides are ALREADY co-located on BLOCK_KEY
-    # (e.g. read from tables bucketed on it — bucketing.py): skips the
-    # explicit pre-join repartition so the blocked join runs
-    # exchange-free. The caller owns the guarantee.
-    pre_partitioned: bool = False
-    # estimated hot-row count above which the salted join stops
-    # broadcasting the hot side and instead replicates it per shard
-    # pair, joining on (block_key, __shard_l, __tgt). Under broadcast
-    # the left repartition alone fixes the triangular-target skew; but
-    # a too-big-to-broadcast hot side becomes a SortMergeJoin whose
-    # exchange re-partitions by the JOIN key — (block_key, __tgt) is
-    # triangular again, so the join key itself must carry the shard
-    # pair at the price of one extra replication of the thin hot side.
-    broadcast_hot_rows: int = 1_000_000
-    # BYTE cap on the same decision: rows alone mislead with wide rec
-    # structs (1M rows of long text is multi-GB — past Spark's
-    # broadcast limit and into executor OOM territory even where the
-    # row count looks safe). Estimated as rows × a static per-row
-    # width from the rec schema (see _est_row_bytes); whichever of the
-    # row/byte caps is hit first disables the broadcast.
-    broadcast_hot_bytes: int = 256 << 20
     # score eligible shapes block-locally (grouped.py): records cross
     # the JVM↔Python boundary once per block/cell instead of once per
     # pair — the O(rows)-traffic scoring path. Covers dedup AND A×B
@@ -100,14 +89,6 @@ class PairingConfig:
     # multi-bucket or jointly-keyed indices, non-batch scorers) use
     # the join path regardless of this flag.
     grouped_scoring: bool = True
-    # localCheckpoint the keyed side(s) before use. The salted path
-    # otherwise evaluates each side up to 3× (hot-key collect — key
-    # columns only, recs pruned — plus the cold and hot branches);
-    # recompute is pure CPU on a declarative plan, while caching costs
-    # executor storage for ids+keys+rec structs. Turn on when the
-    # index is expensive to evaluate (QGramIndex explodes grams twice
-    # per evaluation) and the recs are narrow.
-    cache_keyed_side: bool = False
     # Adaptive cell oversubscription. rows_per_shard alone bounds the
     # WORST task but not the task COUNT: one mass-dominant hot block
     # (24k rows under the defaults) yields only s(s+1)/2 ≈ 78 cells,
@@ -197,34 +178,6 @@ def block_statistics(side: DataFrame, dedup: bool) -> DataFrame:
     return counts.withColumn("n_pairs", pair_cnt.cast("long"))
 
 
-def _est_row_bytes(dt) -> int:
-    """Static per-row width estimate (bytes) for a Catalyst data type,
-    in the spirit of Catalyst's ``defaultSize`` but with variable-width
-    types costed pessimistically (string 48, binary 128, containers at
-    a nominal 16 elements) — this guards a broadcast decision, so
-    over-estimating degrades to a still-correct SortMergeJoin while
-    under-estimating risks OOM."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.StructType):
-        return sum(_est_row_bytes(f.dataType) for f in dt.fields) + 8
-    if isinstance(dt, T.ArrayType):
-        return 16 * _est_row_bytes(dt.elementType) + 8
-    if isinstance(dt, T.MapType):
-        return 16 * (_est_row_bytes(dt.keyType) + _est_row_bytes(dt.valueType)) + 8
-    if isinstance(dt, T.StringType):
-        return 48
-    if isinstance(dt, T.BinaryType):
-        return 128
-    if isinstance(dt, (T.ByteType, T.BooleanType)):
-        return 1
-    if isinstance(dt, T.ShortType):
-        return 2
-    if isinstance(dt, (T.IntegerType, T.FloatType, T.DateType)):
-        return 4
-    return 8  # long / double / decimal / timestamp / anything else
-
-
 def _cell_target(cfg: PairingConfig, n_parts: int) -> int:
     """Cells one hot block should yield under the adaptive widening
     (oversubscription × partition count); 0 when disabled (a
@@ -243,9 +196,9 @@ def _wide_shard_cap(cfg: PairingConfig, n_parts: int, grid: bool) -> int:
     smallest s whose cell count reaches oversubscription × n_parts
     (triangular s(s+1)/2 cells for the dedup self-join; per-SIDE
     sqrt(target) for the match grid, where cells = sa·sb — the
-    asymmetric-block compensation in candidate_pairs/grouped then
-    widens the bigger side toward target/s_other when the smaller
-    side's floor binds). 0 when the adaptive widening is disabled."""
+    asymmetric-block compensation in ``_grid_shards_expr`` then widens
+    the bigger side toward target/s_other when the smaller side's
+    floor binds). 0 when the adaptive widening is disabled."""
     target = _cell_target(cfg, n_parts)
     if not target:
         return 0
@@ -256,46 +209,13 @@ def _wide_shard_cap(cfg: PairingConfig, n_parts: int, grid: bool) -> int:
     return max(1, math.ceil((math.sqrt(8.0 * target + 1.0) - 1.0) / 2.0))
 
 
-def _shard_count(
-    n: int, cfg: PairingConfig, wide_cap: int, base_floor: int = 2
-) -> int:
-    """Shards for a hot block of ``n`` rows: the rows_per_shard-based
-    count (per-task pair budget), widened toward ``wide_cap`` (cluster-
-    width cell oversubscription) but never below ``min_shard_rows``
-    rows per shard."""
-    base = max(base_floor, -(-n // cfg.rows_per_shard))
-    if wide_cap <= base:
-        return base
-    return max(base, min(wide_cap, -(-n // cfg.min_shard_rows)))
-
-
-def _grid_shards(
-    na: int, nb: int, cfg: PairingConfig, wide_cap: int, target: int
-) -> tuple[int, int]:
-    """(sa, sb) for a hot A×B match block. Each side first gets the
-    symmetric sqrt(target) cap; then, because an asymmetric block's
-    small side is usually pinned by its min_shard_rows floor (sb tiny
-    ⇒ sa·sb ≪ target — the cells-≫-partitions goal silently missed),
-    the bigger side is re-widened toward ceil(target / s_small)."""
-    sa = _shard_count(na, cfg, wide_cap, base_floor=1)
-    sb = _shard_count(nb, cfg, wide_cap, base_floor=1)
-    if target and sa * sb < target:
-        if na >= nb:
-            sa = _shard_count(na, cfg, max(wide_cap, -(-target // max(1, sb))),
-                              base_floor=1)
-        else:
-            sb = _shard_count(nb, cfg, max(wide_cap, -(-target // max(1, sa))),
-                              base_floor=1)
-    return sa, sb
-
-
 def _shard_count_expr(n_col, cfg: PairingConfig, cap, base_floor: int):
-    """Column twin of ``_shard_count`` (long-typed; caller casts):
-    rows_per_shard-based count, widened toward ``cap`` (an int — 0
-    disables — or a Column for the grid's dynamic re-widening) but
-    never below ``min_shard_rows`` rows per shard. The grouped path
-    uses this so its declarative shard sizing cannot drift from the
-    driver-side rule."""
+    """Shards for a hot block of ``n_col`` rows (long-typed; caller
+    casts): the rows_per_shard-based count (per-task pair budget, at
+    least ``base_floor``), widened toward ``cap`` (an int — 0 disables —
+    or a Column for the grid's dynamic re-widening; the cluster-width
+    cell oversubscription) but never below ``min_shard_rows`` rows per
+    shard."""
     s = F.greatest(
         F.lit(base_floor).cast("long"),
         F.ceil(n_col / F.lit(cfg.rows_per_shard)),
@@ -313,9 +233,12 @@ def _shard_count_expr(n_col, cfg: PairingConfig, cap, base_floor: int):
 
 def _grid_shards_expr(na_col, nb_col, cfg: PairingConfig, wide_cap: int,
                       target: int):
-    """Column twin of ``_grid_shards``: per-side sqrt(target) widening,
-    then the bigger side re-widened toward ceil(target / s_other) when
-    the smaller side's floor pins the cell count under target. Returns
+    """(sa, sb) for a hot A×B match block. Each side first gets the
+    symmetric sqrt(target) cap (``wide_cap``); then, because an
+    asymmetric block's small side is usually pinned by its
+    min_shard_rows floor (sb tiny ⇒ sa·sb ≪ target — the
+    cells-≫-partitions goal silently missed), the bigger side is
+    re-widened toward ceil(target / s_small). Returns
     (sa, sb) as LONG columns (the product guard below stays in long —
     an int32 product would wrap for degenerate mega-blocks)."""
     sa = _shard_count_expr(na_col, cfg, wide_cap, 1)
@@ -334,81 +257,6 @@ def _grid_shards_expr(na_col, nb_col, cfg: PairingConfig, wide_cap: int,
     return sa, sb
 
 
-def _hot_blocks(side: DataFrame, cfg: PairingConfig):
-    """Returns [(block_key, n_shards, n_rows)] for blocks above the
-    salt threshold — the LARGEST blocks first, so if the
-    ``max_hot_keys`` cap ever bites, the keys that stay unsalted are
-    the smallest offenders, never the worst one."""
-    rows = (
-        side.groupBy(BLOCK_KEY)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > cfg.salt_threshold)
-        .orderBy(F.col("n").desc(), F.col(BLOCK_KEY).asc())
-        .limit(cfg.max_hot_keys)
-        .collect()
-    )
-    wide = _wide_shard_cap(cfg, _n_parts(side, cfg), grid=False)
-    return [(r[BLOCK_KEY], _shard_count(r["n"], cfg, wide), r["n"]) for r in rows]
-
-
-# above this many hot keys, fall back to the pickled-RDD path: a
-# literal plan with 100k struct literals would bloat analysis/codegen
-# far past the one-off Python-worker cost it avoids
-_MAX_LITERAL_HOT = 1_000
-
-
-def _literal_df(spark, rows: list, schema: str) -> DataFrame:
-    """Small driver-side list → DataFrame as a pure-JVM literal plan.
-
-    ``spark.createDataFrame(list)`` ships the rows as PICKLED PYTHON
-    partitions, so its first evaluation spins up a Python worker on
-    every executor core just to yield a handful of rows — measured
-    2.9 s of the 7.8 s candidate-generation wall at 1×8 executors
-    (stages with cpu≈0.03 s but run≈8 s), and 4× that cold-start count
-    at 4×8: a per-core anti-scaling constant in every salted join.
-    ``explode(array(struct(lit..)))`` stays JVM-side end to end: one
-    ~10 ms task, no Python anywhere. Used for the hot-key tables
-    (≤ _MAX_LITERAL_HOT rows — larger lists fall back)."""
-    fields = [f.strip().split() for f in schema.split(",")]
-    entries = [
-        F.struct(*[
-            F.lit(v).cast(t).alias(c) for v, (c, t) in zip(r, fields)
-        ])
-        for r in rows
-    ]
-    return (
-        spark.range(1)
-        .select(F.explode(F.array(*entries)).alias("__kv"))
-        .select("__kv.*")
-    )
-
-
-def _driver_rows_df(spark, rows: list, schema: str) -> DataFrame:
-    if 0 < len(rows) <= _MAX_LITERAL_HOT:
-        return _literal_df(spark, rows, schema)
-    return spark.createDataFrame(rows, schema=schema)
-
-
-def _parted(side: DataFrame, cfg: PairingConfig) -> DataFrame:
-    """Hash-partition a keyed side by block key, unless the caller
-    already co-located it (``cfg.pre_partitioned`` — bucketed tables)."""
-    if cfg.pre_partitioned:
-        return side
-    return side.repartition(_n_parts(side, cfg), F.col(BLOCK_KEY))
-
-
-def _anti_hot(side: DataFrame, hot: list) -> DataFrame:
-    """Rows of ``side`` whose block key is NOT hot, via a broadcast
-    left-anti join — an IN-list literal of up to max_hot_keys keys
-    would bloat the plan/codegen at real scale. ``hot`` tuples lead
-    with the key (dedup: (key, s, n); match: (key, sa, sb))."""
-    spark = side.sparkSession
-    hot_df = F.broadcast(
-        _driver_rows_df(spark, [(h[0],) for h in hot], f"{BLOCK_KEY} string")
-    )
-    return side.join(hot_df, on=BLOCK_KEY, how="left_anti")
-
-
 def _n_parts(side: DataFrame, cfg: PairingConfig) -> int:
     if cfg.target_partitions is not None:
         return cfg.target_partitions
@@ -421,139 +269,199 @@ def _n_parts(side: DataFrame, cfg: PairingConfig) -> int:
     return 2 * effective_parallelism(side.sparkSession)
 
 
-def _dedup_pairs_plain(side: DataFrame, cfg: PairingConfig) -> DataFrame:
-    left = side.select(
-        F.col(BLOCK_KEY),
-        F.col("idx").alias("idx_a"),
-        F.col("rec").alias("a"),
+def _dedup_cells_expr() -> str:
+    # every row is a member of exactly __s cells: paired with each
+    # shard c, in cell (min(__shard, c), max(__shard, c)), as the LOW
+    # member (pos 0) when c >= __shard else the HIGH member (pos 1).
+    # c == __shard is the diagonal cell, pos 0.
+    return (
+        "explode(transform(sequence(0, __s - 1), c -> struct("
+        "least(__shard, c) as l, greatest(__shard, c) as t, "
+        "if(c >= __shard, 0, 1) as pos)))"
     )
-    if not cfg.pre_partitioned:
-        left = left.repartition(_n_parts(side, cfg), F.col(BLOCK_KEY))
-    right = side.select(
-        F.col(BLOCK_KEY),
-        F.col("idx").alias("idx_b"),
-        F.col("rec").alias("b"),
-    )
-    return left.join(right, on=BLOCK_KEY).where(F.col("idx_a") < F.col("idx_b"))
 
 
-def _dedup_pairs_salted(side: DataFrame, hot: list, spark, cfg: PairingConfig) -> DataFrame:
-    hot_df = F.broadcast(
-        _driver_rows_df(spark, [(k, s) for k, s, _ in hot], f"{BLOCK_KEY} string, __s int")
+def _match_cells_expr() -> str:
+    # A rows (__pos 0): cells (__shard, c) for every B shard c;
+    # B rows (__pos 1): cells (c, __shard) for every A shard c.
+    return (
+        "explode(transform(sequence(0, __s_other - 1), c -> struct("
+        "if(__pos = 0, __shard, c) as l, "
+        "if(__pos = 0, c, __shard) as t)))"
     )
-    tagged = side.join(hot_df, on=BLOCK_KEY).withColumn(
-        "__shard", F.pmod(F.xxhash64(F.col("idx")), F.col("__s")).cast("int")
-    )
-    left = tagged.select(
-        F.col(BLOCK_KEY),
-        F.col("__shard").alias("__shard_l"),
-        F.explode(F.expr("sequence(__shard, __s - 1)")).alias("__tgt"),
-        F.col("idx").alias("idx_l"),
-        F.col("rec").alias("rec_l"),
-        # partition by the shard PAIR, not just the target: per-target
-        # load is triangular (target t joins t+1 left shards, so the
-        # last target carries s× the first's pairs — measured 4× max/
-        # mean partition skew and a 40×-median straggler task on a
-        # 5.5k-row hot block). Each (shard_l, tgt) cell is uniform
-        # (≤ rows_per_shard² pairs). The hot right side is broadcast,
-        # so this partitioning survives into pair blowup + scoring;
-        # under an SMJ fallback Catalyst re-exchanges on the join key
-        # and this clause is merely redundant, never wrong.
-    ).repartition(
-        _n_parts(side, cfg), F.col(BLOCK_KEY), F.col("__shard_l"), F.col("__tgt")
-    )
-    # exact hot-row count: _hot_blocks carries each block's n (the
-    # broadcast candidate holds every hot row exactly once)
-    est_hot_rows = sum(n for _, _, n in hot)
-    est_hot_bytes = est_hot_rows * _est_row_bytes(side.schema["rec"].dataType)
-    if est_hot_rows <= cfg.broadcast_hot_rows and est_hot_bytes <= cfg.broadcast_hot_bytes:
-        right = F.broadcast(
-            tagged.select(
-                F.col(BLOCK_KEY),
-                F.col("__shard").alias("__tgt"),
-                F.col("idx").alias("idx_r"),
-                F.col("rec").alias("rec_r"),
-            )
+
+
+def _dedup_members(side: DataFrame, cfg: PairingConfig) -> DataFrame:
+    """Grid-cell membership frame for the dedup mode. A COLD row must
+    contribute exactly ONE member row — the grouped path's O(rows)
+    traffic guarantee (pinned by tests/test_grouped.py's
+    membership-count test).
+
+    Shard counts come from HOT keys only: a map-side partial agg (the
+    shuffle carries (key, count) rows, never the corpus) whose top
+    ``max_hot_keys`` by size (largest first, so a biting cap leaves
+    the smallest offenders unsalted, never the worst one)
+    broadcast-LEFT-joins back onto the rows; cold rows miss the join
+    and coalesce to one shard. Catalyst left to its own estimates
+    plans an unfiltered counts join as an SMJ that re-shuffles the
+    whole corpus by key (plan-verified), hence the explicit broadcast
+    of the bounded hot tail. __s is computed INSIDE the hot frame:
+    computed from __n after the left join, cold rows would get __s=2,
+    not 1 — Spark's greatest() SKIPS nulls, so greatest(2, NULL) = 2
+    and the coalesce default never fires, silently doubling every
+    cold row's cell memberships."""
+    payload = [c for c in side.columns if c not in ("idx", BLOCK_KEY)]
+    if cfg.salt_enabled:
+        # per-task pair budget (rows_per_shard), adaptively widened
+        # toward the cluster-width cell-oversubscription cap so a
+        # mass-dominant block yields cells ≫ partitions (see
+        # PairingConfig.cell_oversubscription)
+        wide = _wide_shard_cap(cfg, _n_parts(side, cfg), grid=False)
+        s_expr = _shard_count_expr(F.col("__n"), cfg, wide, base_floor=2)
+        hot_counts = (
+            side.groupBy(BLOCK_KEY)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .where(F.col("__n") > cfg.salt_threshold)
+            .orderBy(F.col("__n").desc(), F.col(BLOCK_KEY).asc())
+            .limit(cfg.max_hot_keys)
+            .select(BLOCK_KEY, s_expr.cast("int").alias("__s_hot"))
         )
-        joined = left.join(right, on=[BLOCK_KEY, "__tgt"])
+        tagged = side.join(
+            F.broadcast(hot_counts), on=BLOCK_KEY, how="left"
+        ).select(
+            side["*"],
+            F.coalesce(F.col("__s_hot"), F.lit(1)).alias("__s"),
+        )
     else:
-        # too big to broadcast: replicate each right row to every left
-        # shard l <= its own shard t, and put the SHARD PAIR in the
-        # join key — the SMJ exchange then partitions by uniform cells
-        # instead of triangular targets. Same pair set: left (l, t)
-        # meets right (l, t) exactly when l <= t.
-        right = tagged.select(
-            F.col(BLOCK_KEY),
-            F.explode(F.expr("sequence(0, __shard)")).alias("__shard_l"),
-            F.col("__shard").alias("__tgt"),
-            F.col("idx").alias("idx_r"),
-            F.col("rec").alias("rec_r"),
-        )
-        joined = left.join(right, on=[BLOCK_KEY, "__shard_l", "__tgt"])
-    joined = joined.where(
-        (F.col("__shard_l") != F.col("__tgt")) | (F.col("idx_l") < F.col("idx_r"))
+        tagged = side.withColumn("__s", F.lit(1))
+    tagged = tagged.withColumn(
+        "__shard",
+        F.pmod(F.xxhash64(F.col("idx")), F.col("__s")).cast("int"),
     )
-    fwd = F.col("idx_l") < F.col("idx_r")
-    return joined.select(
-        F.col(BLOCK_KEY),
-        F.when(fwd, F.col("idx_l")).otherwise(F.col("idx_r")).alias("idx_a"),
-        F.when(fwd, F.col("rec_l")).otherwise(F.col("rec_r")).alias("a"),
-        F.when(fwd, F.col("idx_r")).otherwise(F.col("idx_l")).alias("idx_b"),
-        F.when(fwd, F.col("rec_r")).otherwise(F.col("rec_l")).alias("b"),
+    cells = F.expr(_dedup_cells_expr())
+    return tagged.select(
+        "idx", BLOCK_KEY, *payload, cells.alias("__cell")
+    ).select(
+        "idx",
+        BLOCK_KEY,
+        *payload,
+        F.col("__cell.l").alias("__l"),
+        F.col("__cell.t").alias("__t"),
+        F.col("__cell.pos").alias("__pos"),
     )
 
 
-def _match_pairs_plain(side_a: DataFrame, side_b: DataFrame, cfg: PairingConfig) -> DataFrame:
-    left = side_a.select(
-        F.col(BLOCK_KEY), F.col("idx").alias("idx_a"), F.col("rec").alias("a")
-    )
-    if not cfg.pre_partitioned:
-        left = left.repartition(_n_parts(side_a, cfg), F.col(BLOCK_KEY))
-    right = side_b.select(
-        F.col(BLOCK_KEY), F.col("idx").alias("idx_b"), F.col("rec").alias("b")
-    )
-    return left.join(right, on=BLOCK_KEY)
-
-
-def _match_pairs_salted(
-    side_a: DataFrame, side_b: DataFrame, hot: list, spark, cfg: PairingConfig
+def _match_members(
+    side_a: DataFrame, side_b: DataFrame, cfg: PairingConfig
 ) -> DataFrame:
-    """Grid sharding for hot match blocks: sharding only one side
-    cannot bound per-task output when the OTHER side dwarfs it (one
-    A-shard × all of B is still ~nb pairs in one task — the exact
-    straggler/OOM this machinery exists to prevent). Each hot key
-    carries (sa, sb) = per-side shard counts; a task owns one grid
-    CELL with ≤ rows_per_shard rows of each side. The join key carries
-    the cell, so even an SMJ fallback exchanges uniformly."""
-    hot_df = F.broadcast(
-        _driver_rows_df(spark, hot, f"{BLOCK_KEY} string, __sa int, __sb int")
+    """Grid-cell membership frame for the A×B match mode: A rows are
+    ``__pos`` 0, B rows ``__pos`` 1. Payload columns one side lacks
+    are NULL on that side's rows."""
+    union = side_a.withColumn("__pos", F.lit(0)).unionByName(
+        side_b.withColumn("__pos", F.lit(1)), allowMissingColumns=True
     )
-    left = (
-        side_a.join(hot_df, on=BLOCK_KEY)
-        .withColumn("__ia", F.pmod(F.xxhash64(F.col("idx")), F.col("__sa")).cast("int"))
-        .select(
-            F.col(BLOCK_KEY),
-            F.col("__ia"),
-            F.explode(F.expr("sequence(0, __sb - 1)")).alias("__ib"),
-            F.col("idx").alias("idx_a"),
-            F.col("rec").alias("a"),
+    payload = [c for c in union.columns if c not in ("idx", BLOCK_KEY, "__pos")]
+    if cfg.salt_enabled:
+        # hot iff the PAIR PRODUCT na·nb exceeds the budget. The
+        # product is a double: na*nb for a degenerate hot key at
+        # 10^12-doc scale can exceed Long.MAX and wrap negative under
+        # non-ANSI SQL — silently classifying the single hottest block
+        # as cold (double loses precision past 2^53 but never the >
+        # comparison or the ordering that matter)
+        thr = float(cfg.salt_threshold * cfg.rows_per_shard)
+        ca = side_a.groupBy(BLOCK_KEY).agg(F.count(F.lit(1)).alias("__na"))
+        cb = side_b.groupBy(BLOCK_KEY).agg(F.count(F.lit(1)).alias("__nb"))
+        prod = F.col("__na").cast("double") * F.col("__nb").cast("double")
+        n_parts_ab = _n_parts(side_a, cfg)
+        wide = _wide_shard_cap(cfg, n_parts_ab, grid=True)
+        target = _cell_target(cfg, n_parts_ab)
+        # per-side widening + asymmetric-block re-widening of the
+        # bigger side; the product guard stays in LONG — an int32
+        # sa·sb would wrap for a degenerate mega-block and collapse sb
+        # to 2, one cell holding the whole cross product. A hot key
+        # must split SOMETHING, hence the sa·sb ≥ 2 floor.
+        sa, sb = _grid_shards_expr(
+            F.col("__na"), F.col("__nb"), cfg, wide, target
         )
-        .repartition(
-            _n_parts(side_a, cfg), F.col(BLOCK_KEY), F.col("__ia"), F.col("__ib")
+        sb = F.when(sa * sb < 2, F.lit(2).cast("long")).otherwise(sb)
+        sa, sb = sa.cast("int"), sb.cast("int")
+        hot_counts = (
+            ca.join(cb, on=BLOCK_KEY)
+            .where(prod > F.lit(thr))
+            .orderBy(prod.desc(), F.col(BLOCK_KEY).asc())
+            .limit(cfg.max_hot_keys)
+            .select(BLOCK_KEY, sa.alias("__sa"), sb.alias("__sb"))
         )
+        tagged = union.join(
+            F.broadcast(hot_counts), on=BLOCK_KEY, how="left"
+        ).select(
+            union["*"],
+            F.coalesce(F.col("__sa"), F.lit(1)).alias("__sa2"),
+            F.coalesce(F.col("__sb"), F.lit(1)).alias("__sb2"),
+        )
+        own = F.when(F.col("__pos") == 0, F.col("__sa2")).otherwise(
+            F.col("__sb2")
+        )
+        other = F.when(F.col("__pos") == 0, F.col("__sb2")).otherwise(
+            F.col("__sa2")
+        )
+        tagged = tagged.withColumn("__s_own", own).withColumn(
+            "__s_other", other
+        ).drop("__sa2", "__sb2")
+    else:
+        tagged = union.withColumn("__s_own", F.lit(1)).withColumn(
+            "__s_other", F.lit(1)
+        )
+    tagged = tagged.withColumn(
+        "__shard",
+        F.pmod(F.xxhash64(F.col("idx")), F.col("__s_own")).cast("int"),
     )
-    right = (
-        side_b.join(hot_df, on=BLOCK_KEY)
-        .withColumn("__ib", F.pmod(F.xxhash64(F.col("idx")), F.col("__sb")).cast("int"))
-        .select(
-            F.col(BLOCK_KEY),
-            F.explode(F.expr("sequence(0, __sa - 1)")).alias("__ia"),
-            F.col("__ib"),
-            F.col("idx").alias("idx_b"),
-            F.col("rec").alias("b"),
-        )
+    cells = F.expr(_match_cells_expr())
+    return tagged.select(
+        "idx", BLOCK_KEY, *payload, "__pos", cells.alias("__cell")
+    ).select(
+        "idx",
+        BLOCK_KEY,
+        *payload,
+        F.col("__cell.l").alias("__l"),
+        F.col("__cell.t").alias("__t"),
+        "__pos",
     )
-    return left.join(right, on=[BLOCK_KEY, "__ia", "__ib"]).drop("__ia", "__ib")
+
+
+def cell_members(
+    side_a: DataFrame, cfg: PairingConfig, side_b: DataFrame | None = None
+) -> DataFrame:
+    """Grid-cell membership of keyed side(s) ``(idx, BLOCK_KEY,
+    payload...)``: each row tagged with its cell(s) ``(__l, __t)`` and
+    its role ``__pos``, hash-partitioned on ``(BLOCK_KEY, __l, __t)``.
+
+    Dedup mode (``side_b`` None): ``__pos`` 0 is the LOW member of an
+    off-diagonal cell (every member of a diagonal cell is 0), 1 the
+    HIGH member; the low×high products of off-diagonal cells plus the
+    triangles of diagonal cells are each unordered pair of a block
+    exactly once. Match mode: ``__pos`` 0 rows come from ``side_a``, 1
+    from ``side_b``; each cell's A×B product is each pair exactly once.
+    Cold blocks are the single cell (0, 0).
+
+    Both scoring paths consume this frame — ``candidate_pairs`` joins
+    members within a cell, the grouped path scores each cell in place —
+    so the hot-block sharding rule exists once."""
+    if side_b is None:
+        members = _dedup_members(side_a, cfg)
+    else:
+        members = _match_members(side_a, side_b, cfg)
+    # explicit REPARTITION_BY_NUM: pair output is quadratic in a cell's
+    # input, so AQE coalescing by INPUT bytes would funnel the whole
+    # pair blowup into a handful of fat tasks. The pinned-width hash
+    # partition on the exact cell keys also guarantees every (block,
+    # cell) group is wholly contained in one partition — the
+    # co-location contract the grouped scorer needs, and the
+    # distribution the within-cell join requires, so that join adds no
+    # exchange.
+    return members.repartition(
+        _n_parts(side_a, cfg), F.col(BLOCK_KEY), F.col("__l"), F.col("__t")
+    )
 
 
 def candidate_pairs(
@@ -571,108 +479,61 @@ def candidate_pairs(
     (``index.multi_bucket``) are deduplicated.
     """
     cfg = cfg or PairingConfig()
-    spark = dfa.sparkSession
-    dedup = dfb is None
     pair_keys = None
-    if not dedup:
+    if dfb is not None:
         pair_keys = index.key_df_pair(dfa, dfb, row_key)
         if pair_keys is None and getattr(index, "dedup_only", False):
             raise ValueError(
                 f"{type(index).__name__} keys are only comparable within one "
                 "dataset (global sort ranks); it cannot be used in match mode"
             )
-    if pair_keys is not None:
-        side_a = keyed_side_from_keys(
-            dfa, pair_keys[0], row_key, needed_cols, "idx", "rec"
-        )
-    else:
-        side_a = keyed_side(dfa, index, row_key, needed_cols, "idx", "rec")
-    # ONE upfront hash-partition by block key, BEFORE any caching: the
-    # hot-stats aggregation, the anti-hot filter and BOTH sides of the
-    # plain (self-)join then share this single exchange — Catalyst's
-    # ReuseExchange collapses the two join children to one physical
-    # shuffle and the final agg/join need no further exchange because
-    # HashPartitioning(block_key) already satisfies their clustering.
-    # Previously the self-join shuffled the corpus TWICE (left
-    # repartition + right SMJ exchange) and the stats agg again — at
-    # 10^12 docs that is the difference between shuffling the corpus
-    # once and three times per pairing run.
-    # hot-block stats aggregate the PRE-exchange side: the groupBy then
-    # runs a map-side partial agg and shuffles only (key, count) rows —
-    # aggregating the repartitioned side instead would shuffle the whole
-    # corpus a second time just to count it (the stats collect is its
-    # own action, so it cannot reuse the pairs query's exchange)
-    stats_a = side_a
-    side_a = _parted(side_a, cfg)
-    if cfg.cache_keyed_side:
-        side_a = side_a.localCheckpoint(storageLevel=_ckpt_level())
-        # the checkpoint already paid the exchange; counting it needs no
-        # shuffle at all AND skips re-evaluating an expensive index
-        stats_a = side_a
 
-    if dedup:
-        # downstream joins/aggs see HashPartitioning(block_key) already
-        # satisfied — _dedup_pairs_plain must not re-shuffle what the
-        # upfront exchange (or the caller's buckets) provides
-        pcfg = replace(cfg, pre_partitioned=True)
-        hot = _hot_blocks(stats_a, cfg) if cfg.salt_enabled else []
-        if not hot:
-            pairs = _dedup_pairs_plain(side_a, pcfg)
-        else:
-            cold = _anti_hot(side_a, hot)
-            pairs = _dedup_pairs_plain(cold, pcfg).unionByName(
-                _dedup_pairs_salted(side_a, hot, spark, cfg)
-            )
-    else:
+    def side(df: DataFrame, i: int) -> DataFrame:
         if pair_keys is not None:
-            side_b = keyed_side_from_keys(
-                dfb, pair_keys[1], row_key, needed_cols, "idx", "rec"
+            return keyed_side_from_keys(
+                df, pair_keys[i], row_key, needed_cols, "idx", "rec"
             )
-        else:
-            side_b = keyed_side(dfb, index, row_key, needed_cols, "idx", "rec")
-        stats_b = side_b
-        side_b = _parted(side_b, cfg)
-        if cfg.cache_keyed_side:
-            side_b = side_b.localCheckpoint(storageLevel=_ckpt_level())
-            stats_b = side_b
-        pcfg = replace(cfg, pre_partitioned=True)
-        if cfg.salt_enabled:
-            ca = stats_a.groupBy(BLOCK_KEY).agg(F.count(F.lit(1)).alias("na"))
-            cb = stats_b.groupBy(BLOCK_KEY).agg(F.count(F.lit(1)).alias("nb"))
-            # double product, not long: na*nb for a degenerate hot key
-            # at 10^12-doc scale can exceed Long.MAX and wrap negative
-            # under non-ANSI SQL — silently classifying the single
-            # hottest block as cold (double loses precision past 2^53
-            # but never the > comparison or the ordering that matter)
-            prod = F.col("na").cast("double") * F.col("nb").cast("double")
-            rows = (
-                ca.join(cb, on=BLOCK_KEY)
-                .where(prod > F.lit(float(cfg.salt_threshold * cfg.rows_per_shard)))
-                .orderBy(prod.desc(), F.col(BLOCK_KEY).asc())
-                .limit(cfg.max_hot_keys)
-                .collect()
-            )
-            n_parts_ab = _n_parts(stats_a, cfg)
-            wide = _wide_shard_cap(cfg, n_parts_ab, grid=True)
-            target = _cell_target(cfg, n_parts_ab)
-            hot = []
-            for r in rows:
-                sa, sb = _grid_shards(r["na"], r["nb"], cfg, wide, target)
-                if sa * sb < 2:
-                    sb = 2  # a hot key must split SOMETHING
-                hot.append((r[BLOCK_KEY], sa, sb))
-        else:
-            hot = []
-        if not hot:
-            pairs = _match_pairs_plain(side_a, side_b, pcfg)
-        else:
-            cold_a = _anti_hot(side_a, hot)
-            cold_b = _anti_hot(side_b, hot)
-            pairs = _match_pairs_plain(cold_a, cold_b, pcfg).unionByName(
-                _match_pairs_salted(side_a, side_b, hot, spark, cfg)
+        return keyed_side(df, index, row_key, needed_cols, "idx", "rec")
+
+    cell = [BLOCK_KEY, "__l", "__t"]
+    if dfb is None:
+        members = cell_members(side(dfa, 0), cfg)
+
+        def role(name: str) -> DataFrame:
+            return members.select(
+                *cell,
+                F.col("__pos").alias(f"pos_{name}"),
+                F.col("idx").alias(f"idx_{name}"),
+                F.col("rec").alias(name),
             )
 
-    pairs = pairs.drop(BLOCK_KEY)
+        # within a cell, keep each unordered pair once (idx_a < idx_b):
+        # low×high member pairs of an off-diagonal cell, any two
+        # members of a diagonal cell. The role test stays inside a
+        # two-sided predicate: a per-side filter would be pushed below
+        # the member exchange and split it into two corpus shuffles.
+        pairs = role("a").join(role("b"), on=cell).where(
+            (F.col("idx_a") < F.col("idx_b"))
+            & (
+                (F.col("pos_a") != F.col("pos_b"))
+                | (F.col("__l") == F.col("__t"))
+            )
+        ).select("idx_a", "a", "idx_b", "b")
+    else:
+        # the union inside cell_members shares only the shard-hash
+        # input; each side keeps its own idx and rec types
+        def tagged(df: DataFrame, i: int, name: str) -> DataFrame:
+            return side(df, i).select(
+                F.xxhash64("idx").alias("idx"),
+                BLOCK_KEY,
+                F.col("idx").alias(f"idx_{name}"),
+                F.col("rec").alias(name),
+            )
+
+        members = cell_members(tagged(dfa, 0, "a"), cfg, tagged(dfb, 1, "b"))
+        left = members.where(F.col("__pos") == 0).select(*cell, "idx_a", "a")
+        right = members.where(F.col("__pos") == 1).select(*cell, "idx_b", "b")
+        pairs = left.join(right, on=cell).drop(*cell)
     if index.multi_bucket:
         pairs = pairs.dropDuplicates(["idx_a", "idx_b"])
     return pairs

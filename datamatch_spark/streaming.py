@@ -318,12 +318,13 @@ def incremental_link_batch(
     if pairing_config is None:
         from .pairing import PairingConfig
 
-        # default OFF per micro-batch: hot-key detection aggregates the
-        # WHOLE reference keyed side and collects to the driver — per
-        # 5-second trigger that is a full reference scan before the
-        # tiny batch join. Deployment handles reference skew by
-        # bucketing/salting at WRITE time; pass an explicit config to
-        # re-enable runtime salting for a known-skewed reference.
+        # default OFF per micro-batch: hot-key detection is a block
+        # count aggregation over the WHOLE reference keyed side — per
+        # 5-second trigger that is a full reference scan and shuffle
+        # feeding the tiny batch join. Deployment handles reference
+        # skew by bucketing/salting at WRITE time; pass an explicit
+        # config to re-enable runtime salting for a known-skewed
+        # reference.
         pairing_config = PairingConfig(salt_enabled=False)
     m = ThresholdMatcher(
         index,

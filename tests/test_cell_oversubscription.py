@@ -11,13 +11,14 @@ limiter of N→4N scaling efficiency."""
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from datamatch_spark import ColumnsIndex, JaroWinklerSimilarity, ThresholdMatcher
 from datamatch_spark.pairing import (
     PairingConfig,
     _cell_target,
-    _grid_shards,
-    _shard_count,
+    _grid_shards_expr,
+    _shard_count_expr,
     _wide_shard_cap,
     candidate_pairs,
 )
@@ -25,6 +26,23 @@ from datamatch_spark.pairing import (
 
 def _tri_cells(s: int) -> int:
     return s * (s + 1) // 2
+
+
+def _eval(spark, *cols) -> tuple:
+    """Values of Column expressions over a one-row frame."""
+    return tuple(spark.range(1).select(*cols).first())
+
+
+def _shards(spark, n: int, cfg: PairingConfig, wide_cap: int) -> int:
+    """Dedup shard count (base floor 2) for a block of ``n`` rows."""
+    return _eval(spark, _shard_count_expr(F.lit(n).cast("long"), cfg, wide_cap, 2))[0]
+
+
+def _grid(spark, na: int, nb: int, cfg: PairingConfig, wide_cap: int,
+                 target: int) -> tuple:
+    """Match grid (sa, sb) for a block of na A rows and nb B rows."""
+    return _eval(spark, *_grid_shards_expr(
+        F.lit(na).cast("long"), F.lit(nb).cast("long"), cfg, wide_cap, target))
 
 
 def test_wide_shard_cap_triangular_reaches_target():
@@ -52,7 +70,7 @@ def test_wide_shard_cap_disabled():
     assert _wide_shard_cap(PairingConfig(cell_oversubscription=-1), 64, True) == 0
 
 
-def test_grid_shards_asymmetric_rewiden():
+def test_grid_shards_asymmetric_rewiden(spark):
     """A one-side-dominant match block must still reach ~target cells:
     the small side's min_shard_rows floor pins sb, so sa is re-widened
     toward ceil(target / sb) instead of stopping at sqrt(target)."""
@@ -60,15 +78,15 @@ def test_grid_shards_asymmetric_rewiden():
     n_parts = 64
     target = _cell_target(cfg, n_parts)  # 256
     wide = _wide_shard_cap(cfg, n_parts, grid=True)  # 16
-    sa, sb = _grid_shards(24_000, 300, cfg, wide, target)
+    sa, sb = _grid(spark, 24_000, 300, cfg, wide, target)
     assert sb == 2  # floor-bound small side
     assert sa == 94  # ceil(24000/256): min_shard_rows still caps it
     assert sa * sb >= 128  # far past the 32 cells of the sqrt-only cap
     # symmetric case unchanged by the re-widening branch
-    sa2, sb2 = _grid_shards(24_000, 24_000, cfg, wide, target)
+    sa2, sb2 = _grid(spark, 24_000, 24_000, cfg, wide, target)
     assert sa2 == sb2 == wide
     # mirrored asymmetry boosts the OTHER side
-    sb3, sa3 = _grid_shards(300, 24_000, cfg, wide, target)
+    sb3, sa3 = _grid(spark, 300, 24_000, cfg, wide, target)
     assert (sa3, sb3) == (sa, sb)
 
 
@@ -81,23 +99,23 @@ def test_positional_config_compat():
     assert cfg.min_shard_rows == 256
 
 
-def test_shard_count_rules():
+def test_shard_count_rules(spark):
     cfg = PairingConfig(rows_per_shard=2_000, min_shard_rows=256)
     wide = _wide_shard_cap(cfg, 64, grid=False)  # target 256 cells → s=23
     assert wide == 23
     # dominant block: widened from ceil(24k/2k)=12 to the wide cap
-    assert _shard_count(24_000, cfg, wide) == 23
+    assert _shards(spark, 24_000, cfg, wide) == 23
     # small hot block: min_shard_rows floor binds (ceil(3000/256)=12)
-    assert _shard_count(3_000, cfg, wide) == 12
+    assert _shards(spark, 3_000, cfg, wide) == 12
     # tiny hot block: stays at the base count — never sliced below
     # min_shard_rows rows per shard
-    assert _shard_count(300, cfg, wide) == 2
+    assert _shards(spark, 300, cfg, wide) == 2
     # widening disabled → pure rows_per_shard sizing
-    assert _shard_count(24_000, cfg, 0) == 12
+    assert _shards(spark, 24_000, cfg, 0) == 12
     # n below rows_per_shard keeps the base floor
-    assert _shard_count(100, cfg, 0) == 2
+    assert _shards(spark, 100, cfg, 0) == 2
     # huge block: rows_per_shard count already past the cap — unchanged
-    assert _shard_count(100_000, cfg, wide) == 50
+    assert _shards(spark, 100_000, cfg, wide) == 50
 
 
 def _skewed(spark):

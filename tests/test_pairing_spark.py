@@ -108,28 +108,31 @@ def test_multi_bucket_pairs_deduped(spark):
     assert pair_ids(pairs) == [(0, 1)]
 
 
-def test_cache_keyed_side_same_pairs(spark):
-    """PairingConfig(cache_keyed_side=True) changes evaluation count,
-    never the pair set."""
-    from datamatch_spark import ColumnsIndex
-    from datamatch_spark.pairing import PairingConfig, candidate_pairs
+def test_salted_plan_build_runs_no_job(spark):
+    """Hot-block sizing is part of the pair plan: building the salted
+    candidate-pair plan runs no Spark job (no hot-key collect), in
+    dedup and match mode."""
+    import uuid
 
-    rows = [(i, "hot" if i < 60 else f"c{i % 7}") for i in range(100)]
-    df = spark.createDataFrame(rows, "row_key long, blk string")
-    base = {
-        (r["idx_a"], r["idx_b"])
-        for r in candidate_pairs(
-            df, ColumnsIndex("blk"), "row_key", [],
-            cfg=PairingConfig(salt_threshold=20, rows_per_shard=10),
-        ).collect()
-    }
-    cached = {
-        (r["idx_a"], r["idx_b"])
-        for r in candidate_pairs(
-            df, ColumnsIndex("blk"), "row_key", [],
-            cfg=PairingConfig(
-                salt_threshold=20, rows_per_shard=10, cache_keyed_side=True
-            ),
-        ).collect()
-    }
-    assert cached == base and base
+    rows = [(i, "hot" if i < 60 else f"c{i % 7}", f"v{i}") for i in range(100)]
+    df = spark.createDataFrame(rows, "row_key long, blk string, v string")
+    dfb = spark.createDataFrame(
+        [(1000 + i, b, v) for i, b, v in rows], "row_key long, blk string, v string"
+    )
+    cfg = PairingConfig(salt_threshold=20, rows_per_shard=10)
+    sc = spark.sparkContext
+    group = f"plan-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "candidate_pairs plan build")
+    try:
+        dedup = candidate_pairs(df, ColumnsIndex("blk"), "row_key", ["v"], cfg=cfg)
+        match = candidate_pairs(
+            df, ColumnsIndex("blk"), "row_key", ["v"], dfb=dfb, cfg=cfg
+        )
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc._jsc.clearJobGroup()
+    assert dedup.count() == 60 * 59 // 2 + sum(
+        n * (n - 1) // 2 for n in (6, 6, 6, 6, 6, 5, 5)
+    )
+    assert match.count() == 60 * 60 + sum(n * n for n in (6, 6, 6, 6, 6, 5, 5))
